@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times each headline query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line for the driver.
   *
@@ -12,20 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 16 MB scan splits — single-file drive corpora otherwise scan
-      // ~5-wide on 32 threads at 100x volume (see Verify.scala)
-      .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     // optional comma-separated subset for focused profiling runs
     // (SPARK_GRAFT_BENCH_ONLY=q_pagerank,q_dup_clusters); unset = all
@@ -282,16 +267,19 @@ object Bench {
     // corpus (sf0.1); SPARK_BENCH_GATE=0 is the experimentation escape
     val gateApplies = sfDir.contains("sf0.1") &&
       sys.env.getOrElse("SPARK_BENCH_GATE", "1") != "0"
+    // a headline that threw is a violation on any corpus: the total
+    // would otherwise silently cover fewer queries
+    val failed = results.collect { case (k, None, _) => k }
     // check() lets an absent lsh_occupancy_tuned pass (arbitrary
     // telemetry need not claim the key), but Bench PRODUCES the key —
     // requireOccTuned makes its silent disappearance a violation here
     val violations =
-      if (gateApplies)
+      (if (gateApplies)
         BenchGate.check(recallMap, calibMap, ivfCostMap, ndcgMap, occTuned,
           simTuned) ++
           BenchGate.requireOccTuned(occTuned) ++
           BenchGate.requireSimTuned(simTuned)
-      else Nil
+      else Nil) ++ BenchGate.requireRan(failed)
     val gateJson = s"""{"checked":$gateApplies,"violations":${
       violations.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     // 4-decimal (0.1 ms) timing precision: full double reprs bloated
@@ -300,7 +288,6 @@ object Bench {
     val qs = results.collect { case (k, Some(v), _) =>
         "\"" + k + "\":" + BenchGate.jsonNum(math.rint(v * 1e4) / 1e4) }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, None, _) => k }
     val total = results.flatMap(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // only the write-then-read queries have a nonzero write leg; emitting
@@ -337,12 +324,13 @@ object Bench {
     // n_common: 0 — so `queries` + `construction` ride the compact line
     // again (~1.3 KB for 46 queries; still under the capture with the
     // head intact because the HEAVY telemetry blocks — recall,
-    // calibration, occupancy, ndcg, streaming — stay file-only).
-    // Additions-only: every pre-existing field is unchanged.
+    // calibration, occupancy, ndcg, streaming — stay file-only). The
+    // headline fields come first and the per-query maps — the part that
+    // grows with the suite — last.
     val compact = s"""{"metric":"total","value":${
       BenchGate.jsonNum(math.rint(total * 1e4) / 1e4)
     },"unit":"sec","passes":$passes,"weather_gbmin":$weatherJson,"weather_ok":$weatherOkJson,"pass_totals":$passTotalsJson,"n_queries":${
-      results.count(_._2.isDefined)},"queries":$qs,"construction":$constructionJson,"failed":$failedJson,"gate":$gateJson,"queries_file":"$outPath","sf":"$sfDir"}"""
+      results.count(_._2.isDefined)},"failed":$failedJson,"gate":$gateJson,"queries_file":"$outPath","sf":"$sfDir","queries":$qs,"construction":$constructionJson}"""
     println(compact)
     spark.stop()
     if (violations.nonEmpty) {

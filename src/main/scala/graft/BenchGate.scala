@@ -188,6 +188,11 @@ object BenchGate {
       case Some(_) => Nil
     }
 
+  /** One violation per headline that threw: a failed query is a named
+    * gate failure, never an omission from the total. */
+  def requireRan(failed: Seq[String]): Seq[String] =
+    failed.map(q => s"query $q failed — every headline must run")
+
   /** JSON-safe number rendering: NaN/Infinity (e.g. a 0/0 recall from an
     * empty truth set) become `null` instead of the bare literals JSON
     * parsers reject. */

@@ -110,11 +110,11 @@ object GraySortBench {
     * session; generation/validation stay untimed like the main. */
   def weatherProbe(spark: SparkSession, gb: Double): Double = {
     val n = (gb * 1e9 / 100).toLong
-    // the SAME dial as the GraySort main below (SPARK_GRAFT_CPUS,
-    // default 32): the rate calibrates against the BENCH_LOCAL band,
+    // the SAME dial as the GraySort main below (GraftSession.cpus): the
+    // rate calibrates against the BENCH_LOCAL band,
     // so it must be measured at the band's parallelism, not whatever
     // the caller's session happens to default to
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
     val base = java.nio.file.Files.createTempDirectory("graft_weather").toString
     try {
       ThemisKV.writeFixed(genRecords(spark, n, skew = false)
@@ -126,17 +126,12 @@ object GraySortBench {
 
   def main(args: Array[String]): Unit = {
     val gb = sys.env.getOrElse("SPARK_GRAYSORT_GB", "2").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val minute = sys.env.get("SPARK_GRAYSORT_MODE").exists(_ == "minute")
     val skew = sys.env.get("SPARK_GRAYSORT_SKEW").exists(_ == "1")
     val n = (gb * 1e9 / 100).toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/tmp/graysort_scratch")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus,
+      Map("spark.local.dir" -> "/tmp/graysort_scratch"))
     import spark.implicits._
 
     // task-metrics accumulation for the minute-mode 1-IO proof
@@ -166,12 +161,12 @@ object GraySortBench {
     sys.addShutdownHook(rmrf(new java.io.File(base)))
 
     // ---- untimed setup: deterministic gensort-style generation + land
-    ThemisKV.writeFixed(genRecords(spark, n, skew).repartition(cpus.toInt),
+    ThemisKV.writeFixed(genRecords(spark, n, skew).repartition(cpus),
       inDir, 100, 10)
 
     // ---- timed: read → range partition on key → sort → write
     if (minute) spark.sparkContext.addSparkListener(listener)
-    val secs = timedSort(spark, inDir, outDir, cpus.toInt)
+    val secs = timedSort(spark, inDir, outDir, cpus)
 
     // ---- minute mode: settle async listener delivery, then PROVE 1-IO
     if (minute) {

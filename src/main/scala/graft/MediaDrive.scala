@@ -377,18 +377,12 @@ object MediaDrive {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_MEDIA_DRIVE_N", "100000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // small-file packing: the default 4 MB open cost would give every
-      // thumbnail a 4 MB bin share (32 files/task at 128 MB); 256 KB
-      // packs ~hundreds of thumbnails per task while still keeping the
-      // multi-MB giants byte-weighted
-      .config("spark.sql.files.openCostInBytes", s"${256 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // small-file packing: the default 4 MB open cost would give every
+    // thumbnail a 4 MB bin share (32 files/task at 128 MB); 256 KB
+    // packs ~hundreds of thumbnails per task while still keeping the
+    // multi-MB giants byte-weighted
+    val spark = GraftSession.build(
+      overrides = Map("spark.sql.files.openCostInBytes" -> s"${256 * 1024}"))
     val base = java.nio.file.Files.createTempDirectory("graft_media_drive")
       .toString
     try {

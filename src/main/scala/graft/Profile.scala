@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiling tool: runs the named headline queries
   * under the exact [[Bench]] session config and prints a per-STAGE time
@@ -17,25 +16,13 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <query> [query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.get("SPARK_PROFILE_PASSES").map(_.toInt).getOrElse(2)
     // A/B experiment overrides: SPARK_PROFILE_CONF="k=v;k2=v2"
     val overrides = sys.env.getOrElse("SPARK_PROFILE_CONF", "")
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-    val spark = overrides.foldLeft(spark0) { case (b, (k, v)) =>
-      b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(overrides = overrides.toMap)
     if (overrides.nonEmpty)
       println(s"==CONF== ${overrides.map { case (k, v) => s"$k=$v" }.mkString(";")}")
 

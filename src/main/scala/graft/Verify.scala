@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,56 +7,20 @@ object Verify {
     // optional 3rd+ args: restrict the dump to the named queries (local
     // iteration; the driver always runs the full registry)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // micros parquet timestamps == DuckDB TIMESTAMP resolution, so the
-      // driver's value compare sees identical instants (INT96 would read
-      // back as ns and can confuse dtype normalization).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // 16 MB scan splits: the driver corpus ships one parquet file per
-      // table, and at replica-drive volume (100×: documents.parquet is
-      // ~600 MB, lineitem ~1.1 GB) the 128 MB default leaves a 32-thread
-      // box scanning 5-wide. Testdata row groups are small (~122k rows),
-      // so 16 MB still cuts on row-group boundaries; sf0.01/sf0.1 files
-      // are under 16 MB and keep their single split.
-      .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
-      // catalog tables (the bucketed-layout queries) keep their metadata
-      // out of the repo cwd; data files go to explicit external paths
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // repartition(1), not coalesce(1): coalesce fuses into the final
+    // stage, so an exchange-free plan (scan→project dumps) would run
+    // single-task END TO END — unnoticeable at sf0.01, a straggler at
+    // replica-scale drives. The explicit shuffle keeps the query itself
+    // at full parallelism and only serializes the one-file write, which
+    // the result must pay anyway.
+    val failed = dumpAll(SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // repartition(1), not coalesce(1): coalesce fuses into the final
-      // stage, so an exchange-free plan (scan→project dumps) would run
-      // single-task END TO END — unnoticeable at the driver's sf0.01,
-      // a straggler at replica-scale drives. The explicit shuffle keeps
-      // the query itself at full parallelism and only serializes the
-      // one-file write, which the result must pay anyway.
-      try {
+      .map { case (name, fn) => name -> (() =>
         fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // per-query progress on stderr: a drive that stalls is
-        // diagnosable from the log's last line (learned at 100×, where
-        // the silent dump loop gave no clue which query was grinding)
-        System.err.println(
-          f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop this query's tracked caches so a 117-query dump doesn't
-      // accumulate storage across unrelated plans
-      finally graft.core.Caches.release()
-    }
+          .parquet(s"$outDir/$name"))
+      })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -74,5 +37,29 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED ${failed.size}: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
+
+  /** Runs every named dump, a throwing one included, and returns the
+    * names that threw — a failed query is a named failure, never a
+    * silently missing dump. Each query's tracked caches are dropped after
+    * it, so a 200-query dump doesn't accumulate storage across unrelated
+    * plans. Per-query progress goes to stderr: a drive that stalls is
+    * diagnosable from the log's last line (learned at 100×, where the
+    * silent dump loop gave no clue which query was grinding). */
+  def dumpAll(dumps: Seq[(String, () => Unit)]): Seq[String] =
+    dumps.flatMap { case (name, dump) =>
+      val t0 = System.nanoTime()
+      try {
+        dump()
+        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      } finally graft.core.Caches.release()
+    }
 }

@@ -18,8 +18,8 @@ object Tuning {
   /** Shuffle partition count for a stage expected to shuffle
     * `shuffleBytes`: ceil(bytes / targetPartitionBytes), floored at
     * one partition per available core (idle cores are pure waste) —
-    * the `spark.sql.shuffle.partitions` setting Bench fixes at 32 for
-    * local[32] and a 1000-executor run derives from its input census.
+    * the `spark.sql.shuffle.partitions` setting GraftSession fixes at N
+    * for local[N] and a 1000-executor run derives from its input census.
     * AQE coalesces over-provisioned partitions at runtime; it cannot
     * invent parallelism that was never provisioned, so the floor is
     * the side to get right. */

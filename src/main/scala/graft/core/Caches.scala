@@ -23,7 +23,7 @@ import org.apache.spark.sql.DataFrame
   * same cache entry (Spark dedupes by canonicalized plan).
   *
   * CONCURRENCY CONTRACT — single driver thread, same as
-  * [[LoopWidth]]: the registry is process-global, so [[release]] drains
+  * [[Fixpoint]]: the registry is process-global, so [[release]] drains
   * every tracked frame in the JVM, including ones another thread or
   * SparkSession is still computing over (the result is a silent
   * recompute, never a wrong answer — Spark re-evaluates the lineage).

@@ -55,7 +55,7 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** On-disk bytes of `$dir/<name>.parquet` — the size signal the
-    * adaptive loop widths ([[LoopWidth.forBytes]]) derive from. Pure
+    * adaptive loop widths ([[Fixpoint.forBytes]]) derive from. Pure
     * driver-side file listing through the Hadoop FS API (works on any
     * scheme, no Spark job — construction stays job-free), cached per
     * path: the testdata tables are immutable for a process lifetime and
@@ -197,9 +197,4 @@ object Tables {
     * applied above still push through the repartition to the scan. */
   def documentsWide(spark: SparkSession, dir: String): DataFrame =
     Widen.forKernel(documents(spark, dir), tableBytes(spark, dir, "documents"))
-
-  /** [[embeddings]] widened for vector kernels (dot / L2 / cell-argmin)
-    * — same rationale as [[documentsWide]]. */
-  def embeddingsWide(spark: SparkSession, dir: String): DataFrame =
-    Widen.forKernel(embeddings(spark, dir), tableBytes(spark, dir, "embeddings"))
 }

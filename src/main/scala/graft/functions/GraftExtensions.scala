@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point registering the engine's native
-  * functions for SQL use:
+  * functions for SQL use. [[graft.GraftSession.build]] registers it; an
+  * embedder's own session builder adds it with
   *
   * {{{
-  * SparkSession.builder()
   *   .withExtensions(new GraftExtensions)      // or
   *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}

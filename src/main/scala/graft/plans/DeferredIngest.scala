@@ -56,10 +56,14 @@ object DeferredIngest {
   private[graft] def addBodyNanos(n: Long): Unit = bodyNanos.addAndGet(n)
 }
 
-/** Logical leaf: just the output attributes and the deferred body. */
+/** Logical leaf: just the output attributes and the deferred body.
+  * `body` closes over the SparkSession, which stops being serializable
+  * once an `observe()` has created its ObservationManager; it is
+  * `@transient` so a plan tree that reaches a task closure never drags
+  * the session along (the body only ever runs on the driver). */
 final case class DeferredIngestNode(
     output: Seq[Attribute],
-    body: () => DataFrame) extends LeafNode {
+    @transient body: () => DataFrame) extends LeafNode {
   // size unknown until the write runs — report "big" so no broadcast of
   // this side is ever planned
   override def computeStats(): Statistics =
@@ -69,10 +73,11 @@ final case class DeferredIngestNode(
 /** Physical leaf: runs the body (driver-side, possibly submitting its
   * own write jobs) at execute time, then hands off the read plan's row
   * RDD. Re-execution re-runs the body — an overwrite-mode write makes
-  * that idempotent. */
+  * that idempotent. `body` is `@transient` for the reason given on
+  * [[DeferredIngestNode]]: `doExecute` runs on the driver only. */
 final case class DeferredIngestExec(
     output: Seq[Attribute],
-    body: () => DataFrame) extends LeafExecNode {
+    @transient body: () => DataFrame) extends LeafExecNode {
   override protected def doExecute(): RDD[InternalRow] = {
     val t0 = System.nanoTime()
     val df = body()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -219,39 +219,30 @@ object Analytics {
     * is cached pre-partitioned on src so only frontier rows shuffle.
     * Output is the per-hop discovery census (hop 0 = seeds). */
   def bfsHops(s: SparkSession, dir: String): DataFrame = {
-    // corpus-proportional distinct at session width, outside the scope;
-    // the explicit narrow repartition pins the cached loop distribution.
+    // corpus-proportional distinct, persisted (so planned at session
+    // width) before the loop scope opens; the explicit narrow
+    // repartition pins the cached loop distribution.
     // Loop width is size-adaptive (anchor-table bytes, clamped to the
-    // session width — LoopWidth.forBytes): the fixed 8 it replaces was
+    // session width — Fixpoint.forBytes): the fixed 8 it replaces was
     // over-wide for bench-scale frontiers and under-wide at 100 TB.
-    val w = graft.core.LoopWidth.forBytes(Tables.events(s, dir),
-      Tables.tableBytes(s, dir, "events"))
+    val w = Fixpoint.forBytes(s, Tables.tableBytes(s, dir, "events"))
     val edges = Tables.events(s, dir)
       .select(col("user_id").as("src"), (col("event_id") % 500).as("dst"))
       .distinct().repartition(w, col("src")).persist()
-    edges.count() // materialize now, at session width
-    try graft.core.LoopWidth.scoped(edges, w) { bfsHopsLoop(edges) }
-    finally edges.unpersist()
-  }
-
-  private def bfsHopsLoop(edges: DataFrame): DataFrame = {
-    {
-      val seeds = edges.select(col("src").as("node"))
-        .filter(col("node") % 100 === 0).distinct()
-      var visited = seeds.withColumn("hop", lit(0L)).localCheckpoint(eager = true)
-      var frontier = visited.select(col("node"))
-      for (h <- 1 to 3) {
-        val next = edges.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint(eager = true)
-        visited = visited.union(next.withColumn("hop", lit(h.toLong)))
-          .localCheckpoint(eager = true)
-        frontier = next
-      }
-      visited.groupBy(col("hop"))
-        .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("id_sum"))
-    }
+    val seeds = edges.select(col("src").as("node"))
+      .filter(col("node") % 100 === 0).distinct()
+    // the visited set carries each node's discovery hop, so the frontier
+    // is the previous round's hop slice and one checkpoint per round
+    // covers both
+    Fixpoint.iterate(seeds.withColumn("hop", lit(0L)), w, 3,
+        owned = Seq(edges)) { (visited, h) =>
+      val frontier = visited.filter(col("hop") === h - 1).select(col("node"))
+      val next = edges.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
+        .select(col("dst").as("node")).distinct()
+        .join(visited.select(col("node")), Seq("node"), "left_anti")
+      visited.union(next.withColumn("hop", lit(h.toLong)))
+    }.last.groupBy(col("hop"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("id_sum"))
   }
 
   private val bfsHopsSql = {
@@ -283,40 +274,28 @@ object Analytics {
     *
     * Scale shape: identical to BFS/components — the weighted edge list
     * is cached pre-partitioned on src (built at session width, see
-    * LoopWidth), per round ONE edge↔distance join + min-aggregation over
+    * Fixpoint), per round ONE edge↔distance join + min-aggregation over
     * candidate rows; rounds needed = shortest-path hop radius. */
   def sssp(s: SparkSession, dir: String): DataFrame = {
     // size-adaptive loop width, same derivation as [[bfsHops]]
-    val w = graft.core.LoopWidth.forBytes(Tables.events(s, dir),
-      Tables.tableBytes(s, dir, "events"))
+    val w = Fixpoint.forBytes(s, Tables.tableBytes(s, dir, "events"))
     val edges = Tables.events(s, dir)
       .select(col("user_id").as("src"), (col("event_id") % 500).as("dst"),
         (col("event_id") % 9 + 1).as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .repartition(w, col("src")).persist()
-    edges.count() // materialize at session width
-    try graft.core.LoopWidth.scoped(edges, w) { ssspLoop(edges) }
-    finally edges.unpersist()
-  }
-
-  private def ssspLoop(edges: DataFrame): DataFrame = {
-    var dist = edges.select(col("src").as("node"))
+    val dist0 = edges.select(col("src").as("node"))
       .filter(col("node") % 100 === 0).distinct()
       .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    def census(round: Int, d: DataFrame) =
-      d.agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("dist_sum"))
-        .select(lit(round.toLong).as("round"), col("n_reached"), col("dist_sum"))
-    var out = census(0, dist)
-    for (r <- 1 to 4) {
+    Fixpoint.iterate(dist0, w, 4, owned = Seq(edges)) { (dist, _) =>
       val cand = edges.join(dist.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(cand)
+      dist.union(cand)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = true)
-      out = out.union(census(r, dist))
-    }
-    out
+    }.frames.zipWithIndex.map { case (d, round) =>
+      d.agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("dist_sum"))
+        .select(lit(round.toLong).as("round"), col("n_reached"), col("dist_sum"))
+    }.reduce(_.union(_))
   }
 
   private val ssspSql = {

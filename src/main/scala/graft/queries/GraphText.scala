@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -329,19 +329,17 @@ object GraphText {
     * keep the plan linear. Degree-biased graphs peel in a handful of
     * rounds; the loop is the driver-side pattern, maxRounds caps it. */
   def kcore(s: SparkSession, dir: String): DataFrame = {
-    // the corpus-proportional distinct runs OUTSIDE the width scope (at
-    // session width); only the derived edge list's peel rounds are narrow
+    // the corpus-proportional distinct is persisted (planned at session
+    // width) before the loop; only the derived edge list's peel rounds
+    // are narrow
     val e0 = Tables.events(s, dir)
       .select((col("user_id") % 4000).as("a"),
         (col("event_id") % 4000 + 4000).as("b"))
-      .distinct()
-      .localCheckpoint(eager = true)
+      .distinct().persist()
     // size-adaptive peel width (anchor bytes, session-width clamp) —
     // replaces the fixed 8 with the same rule the other loops derive
-    graft.core.LoopWidth.scoped(e0, graft.core.LoopWidth.forBytes(e0,
-      Tables.tableBytes(s, dir, "events"))) {
-      kcoreLoop(e0, KCore, KCoreRounds)
-    }
+    kcoreLoop(e0, Fixpoint.forBytes(s, Tables.tableBytes(s, dir, "events")),
+      KCore, KCoreRounds)
   }
 
   /** k-core on a HEAVY-TAILED graph — the multi-round peel exercise the
@@ -372,28 +370,27 @@ object GraphText {
         greatest(col("i"), col("dst")).as("b"))
       .distinct()
 
-  def kcorePowerlaw(s: SparkSession, dir: String): DataFrame = {
-    val e0 = powerlawEdges(s, dir).localCheckpoint(eager = true)
+  def kcorePowerlaw(s: SparkSession, dir: String): DataFrame =
     // the generator inflates `part` rows ~hundredfold (outdeg explode),
     // so the anchor-bytes rule uses a smaller per-partition target to
     // account for the fan-out; still session-width-clamped at scale
-    graft.core.LoopWidth.scoped(e0, graft.core.LoopWidth.forBytes(e0,
-      Tables.tableBytes(s, dir, "part"), bytesPerPartition = 256L << 10)) {
-      kcoreLoop(e0, KCorePowerlawK, KCorePowerlawRounds)
-    }
-  }
+    kcoreLoop(powerlawEdges(s, dir).persist(), Fixpoint.forBytes(s,
+      Tables.tableBytes(s, dir, "part"), bytesPerPartition = 256L << 10),
+      KCorePowerlawK, KCorePowerlawRounds)
 
-  private def kcoreLoop(e0: DataFrame, k: Long, rounds: Int): DataFrame = {
-    var edges = e0
-    // round-tagged views of the per-round CHECKPOINTED edge frames; the
-    // census over all rounds is computed at the end as ONE grouped
-    // aggregation instead of one distinct-aggregate plan per round —
-    // r17 profiling showed the final action spending ~2.5 s in ~27
-    // census stages (9 rounds × 3 stages of countDistinct/sum_distinct
-    // plans over width-1 frames); the fused census is 2 exchanges total
-    val tagged = scala.collection.mutable.ArrayBuffer(
-      edges.select(lit(0L).as("round"), col("a"), col("b")))
-    for (r <- 1 to rounds) {
+  /** Peels the persisted `e0` (released on exit) for `rounds` rounds at
+    * loop width `w` and returns the per-round census.
+    *
+    * PRECONDITION: `e0` holds DISTINCT, CANONICAL (a < b) undirected
+    * edges with no self-loops. The peel's `groupBy(a, b)` collapses an
+    * edge's two endpoint rows into one, so a duplicate edge would count
+    * twice toward both endpoint degrees and then collapse into a single
+    * survivor, and a reversed copy (b, a) would survive as a separate
+    * edge. Both callers build their graphs with `distinct()` over
+    * canonical pairs. */
+  private def kcoreLoop(e0: DataFrame, w: Int, k: Long, rounds: Int): DataFrame = {
+    val wV = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
+    val peeled = Fixpoint.iterate(e0, w, rounds, owned = Seq(e0)) { (edges, _) =>
       // peel in WINDOW form (r17, §2.4): each edge contributes one row
       // per endpoint, a whole-partition window count over the endpoint
       // IS that endpoint's degree, and the edge survives iff the MIN of
@@ -402,16 +399,22 @@ object GraphText {
       // instead of the degree-agg + two-semi-join form's four. Edge
       // sets per round are unchanged (keep ⟺ deg(a) ≥ k ∧ deg(b) ≥ k ⟺
       // min ≥ k), so the oracle-pinned trajectory is identical.
-      val wV = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
-      edges = edges
+      edges
         .select(col("a"), col("b"),
           explode(array(col("a"), col("b"))).as("v"))
         .withColumn("dg", count(lit(1)).over(wV))
         .groupBy(col("a"), col("b")).agg(min(col("dg")).as("mdg"))
         .filter(col("mdg") >= k)
         .select(col("a"), col("b"))
-        .localCheckpoint(eager = true)
-      tagged += edges.select(lit(r.toLong).as("round"), col("a"), col("b"))
+    }
+    // round-tagged views of the per-round CHECKPOINTED edge frames; the
+    // census over all rounds is computed at the end as ONE grouped
+    // aggregation instead of one distinct-aggregate plan per round —
+    // r17 profiling showed the final action spending ~2.5 s in ~27
+    // census stages (9 rounds × 3 stages of countDistinct/sum_distinct
+    // plans over width-1 frames); the fused census is 2 exchanges total
+    val tagged = peeled.frames.zipWithIndex.map { case (edges, r) =>
+      edges.select(lit(r.toLong).as("round"), col("a"), col("b"))
     }
     // per-round census as one two-level aggregation: distinct endpoints
     // per (round, v) group, then per-round node count / id sum / edge

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Fixpoint, GQuery, Tables}
 import graft.core.Caches.TrackedOps
 
 /** Iterative dataflows — the reference's chained-job pattern
@@ -31,23 +30,33 @@ object Iterative {
     * Per iteration: one equi-join rank⋈edges + one hash aggregation —
     * exactly the tagged-union-through-shuffle the reference emulates in
     * `PageRankMapFunction.cc:8-43`/`PageRankReduceFunction.cc:6-64`, but
-    * as a real join. The edge list (with out-degree pre-joined) is cached
+    * as a real join. The edge list and its degree table are cached
     * across iterations. */
+  def pagerank(s: SparkSession, dir: String): DataFrame =
+    // Three fixed iterations chain lazily into one job over the cached
+    // edge list. For long/unbounded iteration counts, checkpoint every
+    // few rounds instead (lineage growth re-optimizes the whole prefix
+    // each step — see pagerankDouble); at 3 the chain is cheaper than
+    // extra job boundaries.
+    pagerankLoop(s, dir, 3, checkpointEvery = 3, 1000000L)(
+      expr("rank DIV d"),
+      expr("150000 + (850000 * contrib) DIV 1000000")).last
+
   /** The part↔supplier bipartite edge list (src-hash layout, 2 columns)
     * plus its node-sized out-degree side table — the shared graph all
-    * PageRank variants iterate over. r16 carried the degree ON the edge
-    * rows via a whole-partition window; r17 profiling showed that window
-    * paying a 1.2M-row sort at edge-build time (10.3 s task time at
-    * sf0.1) and fattening every per-iteration edge read by a third. The
-    * degree is a function of src alone, so it lives in a node-sized
-    * table instead: the degree agg runs ON the cached src-hash layout
-    * (no exchange — groupBy(src) is satisfied by the repartition), and
-    * each iteration attaches rank DIV d on the NODE side before the
-    * edge join (per-edge value is identical — it never depended on the
-    * edge). Symmetrize with ONE explode pass (a union of two
-    * projections would run the scan+distinct subtree twice — DataFrames
-    * share no common subplans). Caller materializes `edges` inside the
-    * loop-width scope and unpersists both. */
+    * PageRank variants iterate over. r16 carried
+    * the degree ON the edge rows via a whole-partition window; r17
+    * profiling showed that window paying a 1.2M-row sort at edge-build
+    * time (10.3 s task time at sf0.1) and fattening every per-iteration
+    * edge read by a third. The degree is a function of src alone, so it
+    * lives in a node-sized table instead: the degree agg runs ON the
+    * cached src-hash layout (no exchange — groupBy(src) is satisfied by
+    * the repartition), and each iteration attaches rank DIV d on the
+    * NODE side before the edge join (per-edge value is identical — it
+    * never depended on the edge). Symmetrize with ONE explode pass (a
+    * union of two projections would run the scan+distinct subtree twice
+    * — DataFrames share no common subplans). Both are persisted lazily;
+    * the loop's first checkpoint materializes them. */
   private def edgesAndDegrees(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val base = Tables.lineitem(s, dir)
@@ -66,51 +75,43 @@ object Iterative {
     (edges, degrees)
   }
 
-  /** Iteration width for the rank/edge state, derived from the anchor
-    * table's bytes and clamped to the session width
-    * ([[graft.core.LoopWidth.forBytes]]): the graph is a distinct
-    * projection of lineitem, so at bench scale (MBs of anchor) the
-    * rounds run a few partitions wide instead of paying the full
-    * session width's per-task fixed costs per round, while at 100 TB
-    * the byte term exceeds the clamp and the rounds keep today's
-    * session-width plan. The edge materialization sits INSIDE the scope
-    * deliberately — its window exchange is what pins the cached edge
-    * layout every round joins against, so it must plan at the loop
-    * width or each round would re-exchange the edges. */
-  private def pagerankWidth(s: SparkSession, dir: String,
-      edges: DataFrame): Int =
-    graft.core.LoopWidth.forBytes(edges, Tables.tableBytes(s, dir, "lineitem"))
-
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
-    val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
-      // seed straight off the degree table — it IS distinct(src), and it
-      // arrives already src-hash-partitioned from the cached layout
-      var ranks = degrees.select(col("node"), lit(1000000L).as("rank"))
-      for (_ <- 1 to 3) {
-        // Three fixed iterations chain lazily into one job over the cached
-        // edge list. For long/unbounded iteration counts, checkpoint every
-        // few rounds instead (lineage growth re-optimizes the whole prefix
-        // each step — see pagerankDouble); at 3 the chain is cheaper than
-        // extra job boundaries.
-        // shuffled-hash join, building on the node-state side: avoids
-        // re-sorting the cached edge list every iteration (SMJ would),
-        // and unlike a broadcast stays valid when node state is huge.
-        // rank DIV d attaches on the node side (degrees ⋈ ranks, both
-        // node-sized and co-partitioned) before the edge join.
-        val contribs = degrees
-          .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), expr("rank DIV d").as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
-            col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            expr("150000 + (850000 * contrib) DIV 1000000").as("rank"))
-      }
-      ranks.localCheckpoint(eager = true)
-    } finally { edgesD.unpersist(); degrees.unpersist() }
+  /** The PageRank round, shared by every variant: `share` is a node's
+    * per-edge contribution from its `rank` and degree `d`, `damp` the
+    * new rank from the summed `contrib`. The loop width derives from the
+    * anchor table's bytes ([[graft.core.Fixpoint.forBytes]]): the graph
+    * is a distinct projection of lineitem, so at bench scale (MBs of
+    * anchor) the rounds run a few partitions wide instead of paying the
+    * full session width's per-task fixed costs per round, while at
+    * 100 TB the byte term exceeds the clamp and the rounds keep the
+    * session-width plan. */
+  private def pagerankLoop(s: SparkSession, dir: String, iters: Int,
+      checkpointEvery: Int, rank0: Any)(share: Column, damp: Column)
+      : Fixpoint.Result = {
+    val w = Fixpoint.forBytes(s, Tables.tableBytes(s, dir, "lineitem"))
+    val (edges, degrees) = edgesAndDegrees(s, dir)
+    // seed straight off the degree table — it IS distinct(src), and it
+    // arrives already src-hash-partitioned from the cached layout; only
+    // round 1 reads it, so it stays lazy
+    Fixpoint.iterate(degrees.select(col("node"), lit(rank0).as("rank")), w,
+        iters, checkpointEvery, owned = Seq(edges, degrees),
+        materializeInit = false) { (ranks, _) =>
+      // shuffled-hash join, building on the node-state side: avoids
+      // re-sorting the cached edge list every iteration (SMJ would),
+      // and unlike a broadcast stays valid when node state is huge.
+      // The share attaches on the node side (degrees ⋈ ranks, both
+      // node-sized and co-partitioned) before the edge join.
+      val contribs = degrees
+        .join(ranks.hint("shuffle_hash"), Seq("node"))
+        .select(col("node"), share.as("c"))
+      edges.join(contribs.hint("shuffle_hash"), col("src") === col("node"))
+        .groupBy(col("dst"))
+        .agg(sum(col("c")).as("contrib"))
+        .select(col("dst").as("node"), damp.as("rank"))
+    }
   }
+
+  private val doubleShare = col("rank") / col("d")
+  private val doubleDamp = lit(0.15) + lit(0.85) * col("contrib")
 
   /** Production PageRank: double-precision ranks (the scaled-integer form
     * above exists for oracle exactness and overflows past ~1e9 nodes) and
@@ -121,26 +122,8 @@ object Iterative {
     * (double summation order is engine- and run-dependent); PageRankSpec
     * asserts rank-order agreement with the integer-exact form. */
   def pagerankDouble(s: SparkSession, dir: String,
-      iters: Int = 3, checkpointEvery: Int = 3): DataFrame = {
-    val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
-      var ranks = degrees.select(col("node"), lit(1.0).as("rank"))
-      for (i <- 1 to iters) {
-        val contribs = degrees
-          .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), (col("rank") / col("d")).as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
-            col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            (lit(0.15) + lit(0.85) * col("contrib")).as("rank"))
-        if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint(eager = true)
-      }
-      ranks.localCheckpoint(eager = true)
-    } finally { edgesD.unpersist(); degrees.unpersist() }
-  }
+      iters: Int = 3, checkpointEvery: Int = 3): DataFrame =
+    pagerankLoop(s, dir, iters, checkpointEvery, 1.0)(doubleShare, doubleDamp).last
 
   /** Conserved-mass census of the double-precision PageRank — the
     * portable face of [[pagerankDouble]]: one row per iteration with the
@@ -160,28 +143,13 @@ object Iterative {
     * Each iteration is referenced twice (census + next round), so ranks
     * checkpoint every round — which is also what cuts lineage for long
     * runs. */
-  def pagerankDoubleMass(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
-      var ranks = degrees.select(col("node"), lit(1.0).as("rank"))
-      val census = (1 to iters).map { i =>
-        val contribs = degrees
-          .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), (col("rank") / col("d")).as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
-            col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            (lit(0.15) + lit(0.85) * col("contrib")).as("rank"))
-          .localCheckpoint(eager = true)
+  def pagerankDoubleMass(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    pagerankLoop(s, dir, iters, checkpointEvery = 1, 1.0)(doubleShare, doubleDamp)
+      .frames.zipWithIndex.drop(1).map { case (ranks, i) =>
         ranks.agg(count(lit(1)).as("n_nodes"),
             expr("CAST(round(SUM(rank) * 1000) AS BIGINT)").as("mass_milli"))
           .select(lit(i.toLong).as("iter"), col("n_nodes"), col("mass_milli"))
-      }
-      census.reduce(_.unionByName(_))
-    } finally { edgesD.unpersist(); degrees.unpersist() }
-  }
+      }.reduce(_.unionByName(_))
 
   private val pagerankDoubleMassSql = {
     def iter(prev: String, out: String) =
@@ -252,31 +220,30 @@ object Iterative {
     hitsGraph(Tables.lineitem(s, dir)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sup")).distinct())
 
-  /** [[hits]] over an explicit (p, sup) edge frame (spec surface). */
+  /** [[hits]] over an explicit (p, sup) edge frame (spec surface). Each
+    * half-step is one loop round: odd rounds derive hubs from the
+    * previous authorities, even rounds authorities from those hubs, so
+    * rounds 5 and 6 are the third iteration's scores. */
   private[graft] def hitsGraph(base: DataFrame): DataFrame = {
     val edgesByP = base.repartition(col("p")).persist()
     val edgesBySup = base.repartition(col("sup")).persist()
-    try {
-      var a = edgesBySup.select(col("sup")).distinct()
-        .select(col("sup"), lit(1000000L).as("a"))
-        .localCheckpoint(eager = true)
-      var h: DataFrame = null
-      for (_ <- 1 to 3) {
-        val hRaw = edgesBySup.join(a.hint("shuffle_hash"), "sup")
-          .groupBy(col("p")).agg(sum(col("a")).as("hr"))
-        h = hRaw.crossJoin(hRaw.agg(max(col("hr")).as("hm")))
-          .select(col("p"), expr("(hr * 1000000) DIV hm").as("h"))
-          .localCheckpoint(eager = true)
-        val aRaw = edgesByP.join(h.hint("shuffle_hash"), "p")
-          .groupBy(col("sup")).agg(sum(col("h")).as("ar"))
-        a = aRaw.crossJoin(aRaw.agg(max(col("ar")).as("am")))
-          .select(col("sup"), expr("(ar * 1000000) DIV am").as("a"))
-          .localCheckpoint(eager = true)
-      }
-      h.select(lit("hub").as("role"), col("p").as("node"), col("h").as("score"))
-        .union(a.select(lit("authority").as("role"), col("sup").as("node"),
-          col("a").as("score")))
-    } finally { edgesByP.unpersist(); edgesBySup.unpersist() }
+    val a0 = edgesBySup.select(col("sup")).distinct()
+      .select(col("sup"), lit(1000000L).as("a"))
+    // both edge caches are laid out at the session width, so the rounds
+    // run there too and never re-exchange them
+    val f = Fixpoint.iterate(a0, Fixpoint.sessionWidth(base.sparkSession), 6,
+        owned = Seq(edgesByP, edgesBySup)) { (prev, r) =>
+      val (edges, from, to, prevScore, score) =
+        if (r % 2 == 1) (edgesBySup, "sup", "p", "a", "h")
+        else (edgesByP, "p", "sup", "h", "a")
+      val raw = edges.join(prev.hint("shuffle_hash"), from)
+        .groupBy(col(to)).agg(sum(col(prevScore)).as("raw"))
+      raw.crossJoin(raw.agg(max(col("raw")).as("top")))
+        .select(col(to), expr("(raw * 1000000) DIV top").as(score))
+    }
+    f.frames(5).select(lit("hub").as("role"), col("p").as("node"), col("h").as("score"))
+      .union(f.frames(6).select(lit("authority").as("role"), col("sup").as("node"),
+        col("a").as("score")))
   }
 
   private val hitsSql = {

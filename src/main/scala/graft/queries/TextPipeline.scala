@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables, Widen}
+import graft.core.{Caches, Fixpoint, GQuery, Tables, Widen}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -1101,82 +1101,73 @@ object TextPipeline {
     * [[dupClusters]]. */
   private[graft] def hashMinComponents(
       nodes: DataFrame, pairs: DataFrame, iters: Int): DataFrame = {
-    val edges = dupEdges(pairs)
-    // scope at the edges' own layout width so per-round joins reuse the
-    // cached hash partitioning instead of re-exchanging the edge list
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      hashMinComponentsLoop(nodes, edges, iters)
-    } finally edges.unpersist()
+    val (edges, w) = dupEdges(pairs)
+    // Only nodes incident to an edge can ever change label, so the loop
+    // iterates over V(E) — the edge endpoints — and the (usually vast)
+    // singleton majority is attached AFTER the loop with one
+    // label-side-broadcast join. In a near-dup graph V(E) is the set of
+    // documents with at least one duplicate — orders of magnitude below
+    // the corpus — so per-round state shrinks from corpus-sized to
+    // duplicate-graph-sized. (Callers pass nodes ⊇ V(E); edges naming
+    // ids outside `nodes` would now propagate their labels, where before
+    // they were ignored.)
+    //
+    // labels is referenced TWICE per round (neighbor-min build + the
+    // carry-forward join), so a lazily-chained loop would duplicate the
+    // whole upstream subtree each round — 2^iters plan growth (measured:
+    // 5 lazy rounds benched 15 s vs 2 s checkpointed). Every round is
+    // checkpointed; the per-round job is join + agg over label rows only.
+    val labels = Fixpoint.iterate(selfLabels(edges), w, iters,
+        owned = Seq(edges)) { (labels, _) =>
+      // min neighbor label, shuffle-hash-joined on the small label side
+      // (same reasoning as the PageRank iteration: SMJ would re-sort the
+      // cached edges every round). A union-form carry (labels ∪ contrib
+      // → one MIN agg, saving the second join) was A/B'd in r17 and
+      // LOST (1.81 → 2.10 s same-window at sf0.1) — the join form
+      // stays.
+      labels.join(neighborMin(edges, labels), col("doc_id") === col("dst"), "left")
+        .select(col("doc_id"),
+          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+    }.last
+    attachSingletons(nodes, labels)
   }
 
   /** Symmetrized dup-graph edge list, hash-partitioned on src at a
-    * SIZE-ADAPTIVE loop width and MATERIALIZED before the width scope is
-    * entered: the corpus-proportional upstream (MinHash bands, signature
-    * pair agg) must plan at the session width — only the derived edge
-    * list and the label rounds are narrow. Symmetrization is ONE explode
-    * pass: a union of two projections would evaluate that upstream twice
-    * (DataFrames share no common subplans). The width derives from the
-    * edge COUNT the materialization already pays
-    * ([[graft.core.LoopWidth.forRows]], session-width-clamped at scale —
-    * replaces the fixed 8): the raw list is cached once at its upstream
-    * layout, counted, and the narrow re-hash then reads that cache, so
-    * the extra step costs one metadata-sized job, not a recompute.
-    * Caller unpersists (the raw cache is dropped here). */
-  private def dupEdges(pairs: DataFrame): DataFrame = {
-    val raw = pairs
+    * SIZE-ADAPTIVE loop width (returned with it). The raw symmetric
+    * list is checkpointed at the session width — the corpus-proportional
+    * upstream (MinHash bands, signature pair agg) must plan there — and
+    * its row count rides that same action as an observed metric, so the
+    * width ([[Fixpoint.forRows]], session-width-clamped at scale —
+    * replaces the fixed 8) costs no job of its own. The narrow re-hash
+    * reads the checkpoint and is persisted lazily; its first reader
+    * materializes it. Symmetrization is ONE explode pass: a
+    * union of two projections would evaluate that upstream twice
+    * (DataFrames share no common subplans). Caller unpersists. */
+  private def dupEdges(pairs: DataFrame): (DataFrame, Int) = {
+    val (raw, m) = Fixpoint.checkpoint(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    val n = raw.count() // materialize now, at session width
-    val w = graft.core.LoopWidth.forRows(raw, n)
-    val edges = raw.repartition(w, col("src")).persist()
-    edges.count() // re-layout narrow off the raw cache
-    raw.unpersist(blocking = false)
-    edges
+      .select(col("e.src").as("src"), col("e.dst").as("dst")),
+      Seq(count(lit(1)).as("n")))
+    val w = Fixpoint.forRows(pairs.sparkSession, m("n").asInstanceOf[Long])
+    (raw.repartition(w, col("src")).persist(), w)
   }
 
-  private def hashMinComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    {
-      // Only nodes incident to an edge can ever change label, so the
-      // loop iterates over V(E) — the edge endpoints — and the (usually
-      // vast) singleton majority is attached AFTER the loop with one
-      // label-side-broadcast join. In a near-dup graph V(E) is the set
-      // of documents with at least one duplicate — orders of magnitude
-      // below the corpus — so per-round state shrinks from corpus-sized
-      // to duplicate-graph-sized. (Callers pass nodes ⊇ V(E); edges
-      // naming ids outside `nodes` would now propagate their labels,
-      // where before they were ignored.)
-      //
-      // labels is referenced TWICE per round (neighbor-min build + the
-      // carry-forward join), so a lazily-chained loop would duplicate the
-      // whole upstream subtree each round — 2^iters plan growth (measured:
-      // 5 lazy rounds benched 15 s vs 2 s checkpointed). Materialize each
-      // round; the per-round job is join + agg over label rows only.
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("lbl"))
-        .localCheckpoint(eager = true)
-      for (_ <- 1 to iters) {
-        // min neighbor label, shuffle-hash-joined on the small label side
-        // (same reasoning as the PageRank iteration: SMJ would re-sort the
-        // cached edges every round). A union-form carry (labels ∪ contrib
-        // → one MIN agg, saving the second join) was A/B'd in r17 and
-        // LOST (1.81 → 2.10 s same-window at sf0.1) — the join form
-        // stays.
-        val nbrMin = edges.join(labels.hint("shuffle_hash"),
-            col("src") === col("doc_id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-        labels = labels.join(nbrMin, col("doc_id") === col("dst"), "left")
-          .select(col("doc_id"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-          .localCheckpoint(eager = true)
-      }
-      nodes.join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
-    }
-  }
+  /** Round 0 of the label loops: every endpoint labeled with itself. */
+  private def selfLabels(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("lbl"))
+
+  /** Per destination, the minimum label among its neighbors. */
+  private def neighborMin(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges.join(labels.hint("shuffle_hash"), col("src") === col("doc_id"))
+      .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+
+  /** `nodes` labeled from the loop's V(E) labels, singletons by id. */
+  private def attachSingletons(nodes: DataFrame, labels: DataFrame): DataFrame =
+    nodes.join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
 
   /** Production components: hash-min PLUS pointer doubling
     * (`lbl ← min(lbl, min-neighbor-lbl, lbl(lbl))` — the label chases its
@@ -1185,59 +1176,29 @@ object TextPipeline {
     * convergence is O(log diameter) — a 100 TB web-graph-diameter
     * component costs tens of rounds, not diameter rounds (the same
     * round-complexity class as large-star/small-star). Convergence is
-    * detected with one tiny aggregation per round: labels only ever
+    * detected with the loop's signature probe: labels only ever
     * DECREASE, so Σlbl is strictly monotone and stalls exactly at the
-    * fixpoint. Per round: one edge↔label join (work ∝ edges), one
-    * label self-join (∝ nodes), one agg. */
+    * fixpoint. sum() over zero rows is NULL — an empty node set is
+    * already converged, not a crash. Per round: one edge↔label join
+    * (work ∝ edges), one label self-join (∝ nodes), one agg. The loop
+    * runs over V(E), singletons attached after it, as in
+    * [[hashMinComponents]]. */
   private[graft] def pointerDoublingComponents(
       nodes: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = dupEdges(pairs)
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      pointerDoublingComponentsLoop(nodes, edges, maxIters)
-    } finally edges.unpersist()
-  }
-
-  private def pointerDoublingComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
-    {
-      // iterate over V(E) only, singletons attached after the loop —
-      // see the identical reasoning in [[hashMinComponents]]; the
-      // convergence sum is likewise over V(E), still strictly monotone
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("lbl"))
-        .localCheckpoint(eager = true)
-      var last = -1L
-      var iters = 0
-      while (iters < maxIters) {
-        val nbrMin = edges.join(labels.hint("shuffle_hash"),
-            col("src") === col("doc_id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-        val jump = labels.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
-        // the convergence sum rides the checkpoint action via observe()
-        // (localCheckpoint runs under withAction, so the CollectMetrics
-        // listener fires) instead of a separate per-round agg job — one
-        // action per round, not two. sum() over zero rows is NULL — an
-        // empty node set is already converged, not a crash.
-        val obs = org.apache.spark.sql.Observation(s"pd_probe_$iters")
-        val next = labels
-          .join(nbrMin, col("doc_id") === col("dst"), "left")
-          .join(jump, col("lbl") === col("j_id"), "left")
-          .select(col("doc_id"),
-            least(col("lbl"),
-              coalesce(col("nlbl"), col("lbl")),
-              coalesce(col("j_lbl"), col("lbl"))).as("lbl"))
-          .observe(obs, coalesce(
-            org.apache.spark.sql.functions.sum(col("lbl")), lit(0L)).as("s"))
-          .localCheckpoint(eager = true)
-        val sum = obs.get.apply("s").asInstanceOf[Long]
-        labels = next
-        iters += 1
-        if (sum == last) iters = maxIters // fixpoint: no label moved
-        else last = sum
-      }
-      nodes.join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
-    }
+    val (edges, w) = dupEdges(pairs)
+    val labels = Fixpoint.iterate(selfLabels(edges), w, maxIters,
+        signature = Seq(coalesce(sum(col("lbl")), lit(0L)).as("s")),
+        owned = Seq(edges)) { (labels, _) =>
+      val jump = labels.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
+      labels
+        .join(neighborMin(edges, labels), col("doc_id") === col("dst"), "left")
+        .join(jump, col("lbl") === col("j_id"), "left")
+        .select(col("doc_id"),
+          least(col("lbl"),
+            coalesce(col("nlbl"), col("lbl")),
+            coalesce(col("j_lbl"), col("lbl"))).as("lbl"))
+    }.last
+    attachSingletons(nodes, labels)
   }
 
   /** Connected components by LARGE-STAR / SMALL-STAR rewriting (Kiveris
@@ -1257,28 +1218,33 @@ object TextPipeline {
     * proportional, at the dup-graph loop width. */
   private[graft] def starComponents(
       nodes: DataFrame, pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    val edges = dupEdges(pairs)
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      starComponentsLoop(nodes, edges, maxIters)
-    } finally edges.unpersist()
-  }
-
-  private def starComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
+    val (edges, w) = dupEdges(pairs)
     // the label universe is V(E) of the INPUT graph (star rounds rewrite
     // the edge list, so the final list names only star endpoints);
-    // `edges` arrives symmetrized, so src alone covers every endpoint
-    val vset = edges.select(col("src").as("doc_id")).distinct()
-      .localCheckpoint(eager = true)
+    // `edges` arrives symmetrized, so src alone covers every endpoint.
+    // Materialized here: the read-off below runs after the loop has
+    // released `edges`.
+    val (vset, _) = Fixpoint.checkpoint(edges.select(col("src").as("doc_id")).distinct())
     // canonical undirected pairs (a < b); input has no self-loops
-    var e = edges.filter(col("src") < col("dst"))
+    val e0 = edges.filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
       .distinct()
-      .localCheckpoint(eager = true)
-    var last = (-1L, -1L)
-    var iters = 0
-    var converged = false
-    while (iters < maxIters && !converged) {
+    // fixpoint probe on every round's checkpoint: the edge count and an
+    // order-free checksum. A (count, checksum) collision could only stop
+    // EARLY on a non-fixpoint — the census oracle (exact transitive
+    // closure) would catch that; rounds only rewrite monotonically
+    // toward stars, they never oscillate. BOTH ids are pmod-reduced
+    // BEFORE the multiply-add (a·1000003 alone overflows Long above
+    // ~9.2e12 ids), so every term is < 1e15+1e9 and the SUM stays inside
+    // Long at any id magnitude (the 100× skew drive overflowed the
+    // unbounded a*1000003+b sum under ANSI at 2.1e9 doc_ids); ≡
+    // (a*1000003+b) mod M by modular arithmetic
+    val M = lit(1000000007L)
+    val star = Fixpoint.iterate(e0, w, maxIters,
+        signature = Seq(count(lit(1)).as("n"),
+          coalesce(sum(pmod(pmod(col("a"), M) * 1000003L + pmod(col("b"), M),
+            M)), lit(0L)).as("sig")),
+        owned = Seq(edges)) { (e, _) =>
       // One FUSED action per round (was three: e1 checkpoint, e2
       // checkpoint, probe agg — at derived loop widths the round cost is
       // per-stage fixed overhead, so action and exchange count IS the
@@ -1302,7 +1268,7 @@ object TextPipeline {
           struct(col("a").as("u"), col("b").as("v")),
           struct(col("b").as("u"), col("a").as("v")))).as("x"))
         .select(col("x.u").as("u"), col("x.v").as("v"))
-      val wU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+      val wU = Window.partitionBy(col("u"))
       val e1 = sym
         .withColumn("m", least(min(col("v")).over(wU), col("u")))
         .filter(col("v") > col("u"))
@@ -1313,52 +1279,25 @@ object TextPipeline {
       // one row per b-partition has a == m (m is that partition's min),
       // so the per-b center edge (m, b) is emitted from that row and the
       // others emit their (m, a) re-hang — one pair per row, no explode.
-      val wB = org.apache.spark.sql.expressions.Window.partitionBy(col("b"))
-      val e2 = e1
-        .withColumn("m", min(col("a")).over(wB))
+      val wB = Window.partitionBy(col("b"))
+      e1.withColumn("m", min(col("a")).over(wB))
         .select(when(col("a") === col("m"),
             struct(col("m").as("a"), col("b").as("b")))
           .otherwise(struct(col("m").as("a"), col("a").as("b"))).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .distinct()
-      // fixpoint probe, folded into the checkpoint action via observe()
-      // (localCheckpoint runs under withAction, so the CollectMetrics
-      // listener fires — no separate probe job). A (count, checksum)
-      // collision could only stop EARLY on a non-fixpoint — the census
-      // oracle (exact transitive closure) would catch that; rounds only
-      // rewrite monotonically toward stars, they never oscillate. BOTH
-      // ids are pmod-reduced BEFORE the multiply-add (a·1000003 alone
-      // overflows Long above ~9.2e12 ids), so every term is < 1e15+1e9
-      // and the SUM stays inside Long at any id magnitude (the 100× skew
-      // drive overflowed the unbounded a*1000003+b sum under ANSI at
-      // 2.1e9 doc_ids); ≡ (a*1000003+b) mod M by modular arithmetic
-      val M = lit(1000000007L)
-      val obs = org.apache.spark.sql.Observation(s"star_probe_$iters")
-      e = e2.observe(obs, count(lit(1)).as("n"),
-          coalesce(sum(pmod(pmod(col("a"), M) * 1000003L + pmod(col("b"), M),
-            M)), lit(0L)).as("sig"))
-        .localCheckpoint(eager = true)
-      iters += 1
-      val m = obs.get
-      val sig = (m("n").asInstanceOf[Long], m("sig").asInstanceOf[Long])
-      if (sig == last || sig._1 == 0L) converged = true
-      else last = sig
     }
     // the member/center read-off below is only valid AT the fixpoint —
     // a budget-exhausted exit would silently emit labels where a node
     // can be both center and member, so fail loudly instead
-    require(converged,
+    require(star.converged,
       s"star components did not reach the star fixpoint in $maxIters " +
         "rounds — raise maxIters (rounds needed grow O(log² n))")
     // at the fixpoint every canonical edge is (center, member): a
     // member's label is its (unique) center, a center labels itself
-    val memberLbl = e.groupBy(col("b")).agg(min(col("a")).as("lbl"))
+    val memberLbl = star.last.groupBy(col("b")).agg(min(col("a")).as("lbl"))
       .select(col("b").as("doc_id"), col("lbl"))
-    nodes.join(vset.join(memberLbl, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("doc_id")).as("lbl")),
-      Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
+    attachSingletons(nodes, attachSingletons(vset, memberLbl))
   }
 
   /** [[dupClusters]] computed by star rewriting — census-identical to

@@ -123,6 +123,21 @@ class BenchGateSpec extends AnyFunSuite {
     assert(BenchGate.requireSimTuned(Some(BenchGate.simTunedBaseline)).isEmpty)
   }
 
+  test("a query that throws turns Bench's gate and Verify's dump red") {
+    // Bench: every failed headline is a named violation, on any corpus
+    assert(BenchGate.requireRan(Nil).isEmpty)
+    val v = BenchGate.requireRan(Seq("q_broken"))
+    assert(v.size == 1 && v.head.contains("q_broken"), v.mkString("; "))
+    // Verify: the broken dump is named, and the dumps after it still run
+    var ran = List.empty[String]
+    val failed = Verify.dumpAll(Seq(
+      "q_ok" -> (() => ran ::= "q_ok"),
+      "q_broken" -> (() => sys.error("deliberately broken")),
+      "q_after" -> (() => ran ::= "q_after")))
+    assert(failed == Seq("q_broken"))
+    assert(ran.reverse == List("q_ok", "q_after"))
+  }
+
   test("jsonNum renders NaN/Infinity as null, numbers as themselves") {
     assert(BenchGate.jsonNum(Double.NaN) == "null")
     assert(BenchGate.jsonNum(Double.PositiveInfinity) == "null")

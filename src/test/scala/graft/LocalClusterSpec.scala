@@ -60,25 +60,16 @@ class LocalClusterSpec extends AnyFunSuite {
 
   private def session(master: String): SparkSession = {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_lc")
-    if (master.startsWith("local-cluster")) {
-      // executors are forked JVMs: they get Spark's own jars from
-      // SPARK_HOME but need the graft classes explicitly
-      val classes = Seq("target/scala-2.13/classes",
-          "target/scala-2.13/test-classes")
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .filter(p => new java.io.File(p).isDirectory)
-        .mkString(java.io.File.pathSeparator)
-      b.config("spark.executor.extraClassPath", classes)
-    }
-    b.getOrCreate()
+    // executors of a local-cluster are forked JVMs: they get Spark's own
+    // jars from SPARK_HOME but need the graft classes explicitly (a
+    // local master has no executor JVM and ignores the classpath)
+    val classes = Seq("target/scala-2.13/classes",
+        "target/scala-2.13/test-classes")
+      .map(p => new java.io.File(p).getAbsolutePath)
+      .filter(p => new java.io.File(p).isDirectory)
+      .mkString(java.io.File.pathSeparator)
+    GraftSession.build(8,
+      Map("spark.master" -> master, "spark.executor.extraClassPath" -> classes))
   }
 
   /** SnapshotStore commit + read as a synthetic head: the custom lake IO

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM writer for SnapshotProcessSpec: one OS process = one
   * SparkSession appending `n` batches to a shared SnapshotStore table
   * through the claim CAS — the cross-PROCESS contention the in-JVM
@@ -18,12 +16,7 @@ object SnapshotWriterProc {
     val Array(tableDir, idS, nS, syncDir) = args
     val id = idS.toInt
     val n = nS.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"snapwriter-$id")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(2, Map("spark.app.name" -> s"snapwriter-$id"))
     import spark.implicits._
     try {
       val sync = java.nio.file.Paths.get(syncDir)
